@@ -3,6 +3,9 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
@@ -16,18 +19,19 @@ import org.apache.spark.sql.types.StructType
   * Layout:
   *   root/data/snap-<id>/         parquet of commit <id>
   *   root/_snapshots/<id>.json    manifest: data dir, stage, marker,
-  *                                metrics, wall_ms (atomic rename commit)
+  *                                metrics, wall_ms (atomic link commit)
   *
   * Commit protocol: write parquet → write manifest to a temp file →
-  * `Files.move(..., ATOMIC_MOVE)`. A reader only sees fully-committed
-  * snapshots; a crash before the rename leaves garbage data files but no
-  * visible snapshot (resume then rewrites them — exactly-once at the
-  * snapshot level). `marker` gives idempotence: committing the same
+  * hard-link it to `<id>.json` (atomic and exclusive). A reader only
+  * sees fully-committed snapshots; a crash before the link leaves
+  * garbage data files but no visible snapshot (resume then rewrites
+  * them — exactly-once at the snapshot level). `marker` gives idempotence: committing the same
   * marker twice is a no-op, which makes `foreachBatch(batchId)` sinks and
   * stage-level pipeline resume replay-safe (BASELINE.json north_rule:
   * "resumable from checkpoint with per-partition lineage + metrics").
   */
 object SnapshotStore {
+  private val json = new ObjectMapper()
   private val instances = new java.util.concurrent.ConcurrentHashMap[String, SnapshotStore]()
 
   /** One store instance per root within a JVM: `commit` serializes
@@ -91,128 +95,39 @@ final class SnapshotStore private (rootStr: String) {
                             hiddenExprs: Seq[String] = Nil,
                             replaces: Seq[Long] = Nil)
 
-  private def q(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-
-  private def render(m: Manifest): String = {
-    val met = m.metrics.toSeq.sorted
-      .map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-    val hid = m.hidden.map(q).mkString("[", ",", "]")
-    val hex = m.hiddenExprs.map(q).mkString("[", ",", "]")
-    val pts = m.parts.map(q).mkString("[", ",", "]")
-    val fls = m.files.map(q).mkString("[", ",", "]")
-    val rpl = m.replaces.mkString("[", ",", "]")
-    s"""{"id":${m.id},"dir":${q(m.dir)},"stage":${q(m.stage)},"marker":${q(m.marker)},"rows":${m.rows},"wall_ms":${m.wallMs},"hidden":$hid,"hidden_exprs":$hex,"parts":$pts,"files":$fls,"replaces":$rpl,"metrics":$met}"""
-  }
-
-  private val strRe = """"((?:[^"\\]|\\.)*)"""".r
-
-  /** Body of the JSON string-array at `key`, found with a quote-aware
-    * scan — a regex bounded by the first ']' would truncate on a ']'
-    * INSIDE a recorded path (e.g. a store root named `run[2026]`),
-    * silently dropping the tail of a file list. The key TAG is located
-    * with the same quote-aware machine (ADVICE r4): [[q]] escapes every
-    * quote so a rendered string cannot actually contain the tag bytes,
-    * but the parser should not depend on the renderer's escaping
-    * invariant at a distance — a tag match inside a marker string
-    * would silently corrupt that snapshot's file list. */
-  private def arrayBody(js: String, key: String): Option[String] = {
-    val tag = "\"" + key + "\":["
-    var scan = 0; var inStr = false; var start = -1
-    while (scan < js.length && start < 0) {
-      val c = js.charAt(scan)
-      if (inStr) {
-        if (c == '\\') scan += 1
-        else if (c == '"') inStr = false
-      } else if (c == '"') {
-        if (js.startsWith(tag, scan)) start = scan else inStr = true
-      }
-      scan += 1
+  /** Manifest codec. Keys, key order and escaping are the layout
+    * every committed `<id>.json` already has. */
+  private[sources] def encode(m: Manifest): String = {
+    val n = SnapshotStore.json.createObjectNode()
+      .put("id", m.id).put("dir", m.dir).put("stage", m.stage).put("marker", m.marker)
+      .put("rows", m.rows).put("wall_ms", m.wallMs)
+    for ((k, vs) <- Seq("hidden" -> m.hidden, "hidden_exprs" -> m.hiddenExprs,
+        "parts" -> m.parts, "files" -> m.files)) {
+      val a = n.putArray(k); vs.foreach(v => a.add(v))
     }
-    if (start < 0) return None
-    val from = start + tag.length
-    var i = from
-    inStr = false
-    while (i < js.length) {
-      val c = js.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1
-        else if (c == '"') inStr = false
-      } else if (c == '"') inStr = true
-      else if (c == ']') return Some(js.substring(from, i))
-      i += 1
-    }
-    None
+    val rpl = n.putArray("replaces"); m.replaces.foreach(v => rpl.add(v))
+    val met = n.putObject("metrics")
+    m.metrics.toSeq.sorted.foreach { case (k, v) => met.put(k, v) }
+    SnapshotStore.json.writeValueAsString(n)
   }
 
-  /** Inverse of [[q]] for the captured group of [[strRe]]/[[kvRe]] —
-    * without it a name containing a quote or backslash reads back
-    * still-escaped and then fails to match the real column (ADVICE
-    * r3). Belt-and-braces: [[commit]] also rejects hidden names
-    * outside a safe identifier alphabet, so escapes never actually
-    * occur in hidden entries. */
-  private def unescape(s: String): String = {
-    val sb = new StringBuilder; var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '\\' && i + 1 < s.length) {
-        i += 1
-        s.charAt(i) match {
-          case 'n' => sb.append('\n'); i += 1
-          case 'u' => sb.append(Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar); i += 5
-          case c => sb.append(c); i += 1
-        }
-      } else { sb.append(s.charAt(i)); i += 1 }
-    }
-    sb.toString
+  private[sources] def decode(js: String): Manifest = {
+    val n = SnapshotStore.json.readTree(js)
+    def get(k: String, v: JsonNode, ok: JsonNode => Boolean): JsonNode =
+      if (v != null && ok(v)) v
+      else throw new IllegalStateException(s"manifest key '$k' missing or mistyped")
+    def long(k: String) = get(k, n.get(k), _.isIntegralNumber).longValue
+    def str(k: String) = get(k, n.get(k), _.isTextual).textValue
+    // absent arrays and metrics (manifests older than those keys) read as empty
+    def elems(k: String) = Option(n.get(k)).toSeq.flatMap(_.asScala)
+    def strs(k: String) = elems(k).map(get(k, _, _.isTextual).textValue)
+    Manifest(long("id"), str("dir"), str("stage"), str("marker"), long("rows"), long("wall_ms"),
+      metrics = Option(n.get("metrics")).toSeq.flatMap(_.properties.asScala)
+        .map(e => e.getKey -> get("metrics", e.getValue, _.isIntegralNumber).longValue).toMap,
+      hidden = strs("hidden"), parts = strs("parts"), files = strs("files"),
+      hiddenExprs = strs("hidden_exprs"),
+      replaces = elems("replaces").map(get("replaces", _, _.isIntegralNumber).longValue))
   }
-
-  private def parseStrArray(js: String, key: String): Seq[String] =
-    arrayBody(js, key).toSeq.flatMap(b =>
-      strRe.findAllMatchIn(b).map(g => unescape(g.group(1))).toSeq)
-
-  private def parseHidden(js: String): Seq[String] = parseStrArray(js, "hidden")
-  private def parseParts(js: String): Seq[String] = parseStrArray(js, "parts")
-  private def parseFiles(js: String): Seq[String] = parseStrArray(js, "files")
-
-  private val longRe = """-?\d+""".r
-  /** Number-array field; absent (pre-compaction manifests) = empty. */
-  private def parseLongArray(js: String, key: String): Seq[Long] =
-    arrayBody(js, key).toSeq.flatMap(b =>
-      longRe.findAllIn(b).map(_.toLong).toSeq)
-
-  private val metricsRe = """"metrics":\{([^}]*)\}""".r
-  private val kvRe = """"((?:[^"\\]|\\.)*)":(-?\d+)""".r
-
-  private def parseMetrics(js: String): Map[String, Long] =
-    metricsRe.findFirstMatchIn(js).map { m =>
-      kvRe.findAllMatchIn(m.group(1))
-        .map(kv => unescape(kv.group(1)) -> kv.group(2).toLong).toMap
-    }.getOrElse(Map.empty)
-
-  private def field(js: String, name: String): String = {
-    val km = ("\"" + name + "\":").r.findFirstMatchIn(js).getOrElse(
-      throw new IllegalStateException(s"manifest missing $name: $js"))
-    val rest = js.substring(km.end)
-    if (rest.startsWith("\"")) {
-      val sb = new StringBuilder; var i = 1
-      while (rest.charAt(i) != '"') {
-        if (rest.charAt(i) == '\\') { i += 1; sb.append(rest.charAt(i) match {
-          case 'n' => '\n'; case '"' => '"'; case '\\' => '\\'; case c => c }) }
-        else sb.append(rest.charAt(i))
-        i += 1
-      }
-      sb.toString
-    } else rest.takeWhile(c => c.isDigit || c == '-')
-  }
-
-  private def parse(js: String): Manifest = Manifest(
-    field(js, "id").toLong, field(js, "dir"), field(js, "stage"),
-    field(js, "marker"), field(js, "rows").toLong, field(js, "wall_ms").toLong,
-    parseMetrics(js), parseHidden(js), parseParts(js), parseFiles(js),
-    parseStrArray(js, "hidden_exprs"), parseLongArray(js, "replaces"))
 
   def manifests(): Seq[Manifest] = {
     // a cached instance (forRoot) can outlive its directories — e.g. a
@@ -228,7 +143,11 @@ final class SnapshotStore private (rootStr: String) {
         val n = p.getFileName.toString
         n.endsWith(".json") && !n.startsWith(".")
       }
-      .map(p => parse(Files.readString(p)))
+      .map { p =>
+        try decode(Files.readString(p))
+        catch { case NonFatal(e) =>
+          throw new IllegalStateException(s"corrupt snapshot manifest $p: ${e.getMessage}", e) }
+      }
       .toSeq.sortBy(_.id)
     finally list.close()
   }
@@ -255,9 +174,8 @@ final class SnapshotStore private (rootStr: String) {
     * the resume-or-recompute probe for callers that still hold the
     * recomputable source (Dedup's sketch resume): a
     * committed-but-externally-wiped snapshot (a state [[manifests]]
-    * and [[migrateLegacyPartitioned]] tolerate) reads as dead here, so
-    * the caller recomputes instead of crashing in [[read]] or
-    * mid-scan on missing files (r5 review). Conservative in the safe
+    * tolerates) reads as dead here, so the caller recomputes instead
+    * of crashing in [[read]] or mid-scan on missing files (r5 review). Conservative in the safe
     * direction only: a false `true` (files vanish between probe and
     * read) fails exactly like today's read; a false `false` merely
     * recomputes. */
@@ -279,60 +197,40 @@ final class SnapshotStore private (rootStr: String) {
     }
   }
 
-  /** `replaceExisting` is passed ONLY by the legacy-migration rewrite
-    * (which overwrites its own `<id>.json`): the JDK leaves
-    * replace-on-atomic-move implementation-specific (POSIX rename
-    * replaces; other filesystems may throw), so that one caller gets a
-    * replace-move fallback. Fresh commits claim the id with
-    * `Files.createLink` — link(2) is atomic AND exclusive (EEXIST),
-    * whereas ATOMIC_MOVE on POSIX is rename(2), which silently
-    * REPLACES an existing target, so a move alone cannot enforce the
-    * duplicate-id fail-loudly contract against a cross-process racer
-    * (r5 review). A duplicate-id race must fail loudly, never clobber
-    * a committed manifest, and a commit must never degrade to a
-    * non-atomic write. */
-  private[sources] def writeManifest(m: Manifest,
-                                     replaceExisting: Boolean = false): Unit = {
+  /** Claims the id with `Files.createLink`: link(2) is atomic AND
+    * exclusive (EEXIST), whereas ATOMIC_MOVE on POSIX is rename(2),
+    * which silently REPLACES an existing target, so a move alone cannot
+    * enforce the duplicate-id fail-loudly contract against a
+    * cross-process racer (r5 review). A duplicate-id race must fail
+    * loudly, never clobber a committed manifest, and a commit must
+    * never degrade to a non-atomic write. */
+  private[sources] def writeManifest(m: Manifest): Unit = {
     Files.createDirectories(snapsDir) // recreate if wiped since construction
     val tmp = Files.createTempFile(snapsDir, s".tmp-${m.id}", ".tmp")
-    Files.write(tmp, render(m).getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, encode(m).getBytes(StandardCharsets.UTF_8))
     val dst = snapsDir.resolve(s"${m.id}.json")
-    if (replaceExisting) {
-      try Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException |
-             _: java.nio.file.AtomicMoveNotSupportedException =>
-          Files.move(tmp, dst, StandardCopyOption.REPLACE_EXISTING)
-      }
-    } else {
-      try { Files.createLink(dst, tmp); Files.delete(tmp) }
-      catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          Files.delete(tmp) // the dot-prefixed orphan would be invisible, but tidy
-          throw new IllegalStateException(
-            s"snapshot id ${m.id} already committed in $root — concurrent " +
-              "writers must share one SnapshotStore.forRoot instance per JVM " +
-              "and one driver per store across processes", e)
-        case _: UnsupportedOperationException |
-             _: java.nio.file.FileSystemException =>
-          // hard links unavailable (exotic fs): fall back to the atomic
-          // move; duplicate-id exclusivity then follows that fs's move
-          // semantics, which is the strongest guarantee it offers
-          Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-      }
+    try { Files.createLink(dst, tmp); Files.delete(tmp) }
+    catch {
+      case e: java.nio.file.FileAlreadyExistsException =>
+        Files.delete(tmp) // the dot-prefixed orphan would be invisible, but tidy
+        throw new IllegalStateException(
+          s"snapshot id ${m.id} already committed in $root — concurrent " +
+            "writers must share one SnapshotStore.forRoot instance per JVM " +
+            "and one driver per store across processes", e)
+      case _: UnsupportedOperationException |
+           _: java.nio.file.FileSystemException =>
+        // hard links unavailable (exotic fs): fall back to the atomic
+        // move; duplicate-id exclusivity then follows that fs's move
+        // semantics, which is the strongest guarantee it offers
+        Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
     }
   }
 
-  /** Relocates a snapshot's parquet files into the stage's shared hive
+  /** Moves a snapshot's parquet files into the stage's shared hive
     * tree under snapshot-unique names (`snap-<id>-<file>`), keeping
-    * each file's hive partition fragment. One loop for BOTH writers of
-    * the file-granular layout — fresh commits (`move = true`: same
-    * filesystem, atomic) and legacy migration (`move = false`: the
-    * source must stay intact until the manifest rewrite lands) — so
-    * the on-disk naming scheme cannot fork between them. Returns the
-    * target paths, i.e. the manifest's file list. */
-  private def relocateIntoStageRoot(src: Path, stageRoot: Path, id: Long,
-                                    move: Boolean): List[String] = {
+    * each file's hive partition fragment. Returns the target paths,
+    * i.e. the manifest's file list. */
+  private def relocateIntoStageRoot(src: Path, stageRoot: Path, id: Long): List[String] = {
     val walk = Files.walk(src)
     try walk.iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
@@ -342,8 +240,7 @@ final class SnapshotStore private (rootStr: String) {
           .map(stageRoot.resolve).getOrElse(stageRoot)
           .resolve(s"snap-$id-${f.getFileName}")
         Files.createDirectories(target.getParent)
-        if (move) Files.move(f, target, StandardCopyOption.ATOMIC_MOVE)
-        else Files.copy(f, target, StandardCopyOption.REPLACE_EXISTING)
+        Files.move(f, target, StandardCopyOption.ATOMIC_MOVE)
         target.toString
       }.toList
     finally walk.close() // release the dir handles the stream holds
@@ -381,10 +278,8 @@ final class SnapshotStore private (rootStr: String) {
              statsCols: Seq[String] = Nil,
              hiddenPartitions: Seq[(String, org.apache.spark.sql.Column)] = Nil,
              replaces: Seq[Long] = Nil): Option[Long] = synchronized {
-    // hidden names also become hive dir names and manifest JSON — keep
-    // them in a safe identifier alphabet so the dir layout and the
-    // regex-parsed manifest round-trip exactly (ADVICE r3: ']' in a
-    // name would break hiddenRe; escapes would break read()'s drop)
+    // partition names become hive dir names and column names — keep
+    // them in a safe identifier alphabet so the dir layout round-trips
     (hiddenPartitions.map(_._1) ++ partitionBy).foreach { n =>
       require(n.matches("[A-Za-z_][A-Za-z0-9_]*"),
         s"partition column name '$n' must match [A-Za-z_][A-Za-z0-9_]*")
@@ -453,7 +348,7 @@ final class SnapshotStore private (rootStr: String) {
       if (!partitioned) (dir.toString, Nil)
       else {
         val stageRoot = dataDir.resolve(s"part-$stage")
-        val moved = relocateIntoStageRoot(dir, stageRoot, id, move = true)
+        val moved = relocateIntoStageRoot(dir, stageRoot, id)
         rmTmpTree(dir)
         (stageRoot.toString, moved)
       }
@@ -576,11 +471,6 @@ final class SnapshotStore private (rootStr: String) {
             p.getFileName.toString.endsWith(".parquet") &&
             !refFiles.contains(p.toAbsolutePath.normalize))
           .toList finally walk.close()
-        // a legacy (pre-file-manifest) partitioned snapshot records the
-        // tree-external snap dir, never the shared tree — but guard
-        // against a manifest whose dir IS this tree with empty files
-        // (the zero-row partitioned shape): such a tree may host data
-        // a future migrate will claim, so only file-level deletes here
         orphans.foreach { p => Files.delete(p); removed += 1 }
       } else if (!refDirs.exists(_.startsWith(abs)) &&
           !refFiles.exists(_.startsWith(abs))) {
@@ -695,70 +585,24 @@ final class SnapshotStore private (rootStr: String) {
 
   /** Layout classification shared by [[read]]/[[readPruned]] and the
     * V2 catalog (one set of rules, or the SQL surface and the
-    * programmatic one diverge on which snapshots they serve):
-    * (flat dirs — one multi-path scan; legacy per-snapshot partitioned
-    * dirs from pre-file-manifest commits — each its own single-root
-    * scan: Spark's directory discovery CANNOT union several
-    * partitioned roots even with identical specs (re-verified r5:
-    * multi-path read of two same-spec hive roots throws
-    * CONFLICTING_DIRECTORY_STRUCTURES), so the SQL-unreadability of
-    * multi-legacy stages (ADVICE r4) is fixed by the explicit
-    * [[migrateLegacyPartitioned]] upgrade instead; file groups — one
-    * file-list scan per stage layout root).
-    * Zero-row snapshots (marker-only) contribute nothing. */
+    * programmatic one diverge on which snapshots they serve): flat
+    * dirs — one multi-path scan; file groups — one file-list scan per
+    * stage layout root. Zero-row snapshots (marker-only) contribute
+    * nothing. A partitioned snapshot that committed rows but lists no
+    * files (a directory-based layout) cannot be served: it fails
+    * loudly rather than silently dropping out of the union. */
   private[sources] def layoutGroups(ms: Seq[Manifest])
-      : (Seq[String], Seq[String], Seq[(String, Seq[Manifest])]) = {
-    def exists(d: String) = Files.exists(Paths.get(d))
+      : (Seq[String], Seq[(String, Seq[Manifest])]) = {
+    val unlisted = ms.filter(m =>
+      m.files.isEmpty && (m.parts.nonEmpty || m.hidden.nonEmpty) && m.rows > 0)
+    if (unlisted.nonEmpty) throw new IllegalStateException(
+      s"partitioned snapshot(s) ${unlisted.map(_.id).mkString(",")} in $root " +
+        "committed rows but list no data files — an unsupported directory-based " +
+        "layout; recommit the stage's data with SnapshotStore.commit")
     val flatDirs = ms.filter(m => m.parts.isEmpty && m.hidden.isEmpty)
-      .map(_.dir).filter(exists)
-    // pre-file-manifest partitioned snapshots: layout recorded, no
-    // file list, own snap-<id> dir (rows > 0 excludes the NEW zero-row
-    // partitioned commits, whose dir is the shared root)
-    val legacyDirs = ms.filter(m =>
-        m.files.isEmpty && (m.parts.nonEmpty || m.hidden.nonEmpty) && m.rows > 0)
-      .map(_.dir).filter(exists).distinct
+      .map(_.dir).filter(d => Files.exists(Paths.get(d)))
     val fileGroups = ms.filter(_.files.nonEmpty).groupBy(_.dir).toSeq.sortBy(_._1)
-    (flatDirs, legacyDirs, fileGroups)
-  }
-
-  /** Upgrades a stage's pre-file-manifest partitioned snapshots to the
-    * file-granular layout (shared hive tree + per-snapshot file lists),
-    * which is what makes a stage with SEVERAL partitioned snapshots
-    * servable as ONE SQL scan — Spark cannot union multiple partitioned
-    * roots in one read (ADVICE r4 upgrade regression; the constraint is
-    * re-verified in the spec). Crash-safe order per snapshot: files are
-    * COPIED into the shared tree under snapshot-unique names, then the
-    * manifest is atomically rewritten to point at them, then the legacy
-    * dir is deleted — a crash before the rewrite leaves readers on the
-    * intact legacy dir plus invisible orphans in the shared tree (file
-    * lists, never directory listings, drive reads there); a crash after
-    * it leaves a stale legacy dir that no manifest references. Returns
-    * the number of migrated snapshots. */
-  def migrateLegacyPartitioned(stage: String): Int = synchronized {
-    val legacy = manifests().filter(m =>
-      m.stage == stage && m.files.isEmpty &&
-        (m.parts.nonEmpty || m.hidden.nonEmpty) && m.rows > 0)
-    val stageRoot = dataDir.resolve(s"part-$stage")
-    // a legacy manifest whose snap dir was externally wiped (tolerated
-    // elsewhere — the store serves the surviving snapshots) has nothing
-    // to relocate and does NOT count as migrated
-    legacy.count { m =>
-      val src = Paths.get(m.dir)
-      Files.isDirectory(src) && {
-        val copied = relocateIntoStageRoot(src, stageRoot, m.id, move = false)
-        // a dir with no parquet files (partially wiped) must NOT be
-        // rewritten: dir=stageRoot with files=Nil would re-classify the
-        // manifest as a legacy dir spanning the SHARED stage tree —
-        // reads would double-serve every migrated snapshot and a repeat
-        // migrate would copy the tree onto itself
-        copied.nonEmpty && {
-          writeManifest(m.copy(dir = stageRoot.toString, files = copied),
-            replaceExisting = true)
-          rmTmpTree(src)
-          true
-        }
-      }
-    }
+    (flatDirs, fileGroups)
   }
 
   /** Source frames for a selected manifest set (see [[layoutGroups]];
@@ -771,9 +615,8 @@ final class SnapshotStore private (rootStr: String) {
       val rd0 = schema.map(spark.read.schema).getOrElse(spark.read)
       if (evolveSchema) rd0.option("mergeSchema", "true") else rd0
     }
-    val (flatDirs, legacyDirs, fileGroups) = layoutGroups(ms)
+    val (flatDirs, fileGroups) = layoutGroups(ms)
     (if (flatDirs.nonEmpty) Seq(reader().parquet(flatDirs: _*)) else Nil) ++
-      legacyDirs.map(d => reader().parquet(d)) ++
       fileGroups.map { case (layoutRoot, group) =>
         reader().option("basePath", layoutRoot).parquet(group.flatMap(_.files): _*)
       }

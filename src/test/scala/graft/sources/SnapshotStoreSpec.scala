@@ -40,6 +40,56 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(store.manifests().size == 1)
   }
 
+  test("a marker with control characters round-trips; its replay is a no-op") {
+    import spark.implicits._
+    val (store, _) = freshStore()
+    val a = Seq((1L, "a")).toDF("k", "v")
+    assert(store.commit(a, "s", "a\tb").isDefined)
+    assert(store.manifests().last.marker == "a\tb")
+    assert(store.commit(a, "s", "a\tb").isEmpty) // replay
+    assert(store.manifests().size == 1)
+    // manifests on disk may spell control characters as \u escapes
+    val escaped = "a\\u0009b\\u001fc" // JSON escapes for tab and 0x1f
+    assert(!escaped.exists(_ < ' '))
+    assert(store.decode(
+      s"""{"id":1,"dir":"d","stage":"s","marker":"$escaped","rows":0,"wall_ms":0}""")
+      .marker == "a\tb\u001fc")
+  }
+
+  test("a truncated or unparseable manifest fails loudly, naming the file") {
+    import spark.implicits._
+    val (store, dir) = freshStore()
+    store.commit(Seq((1L, "a")).toDF("k", "v"), "s", "m1")
+    val path = java.nio.file.Paths.get(dir, "_snapshots", "1.json")
+    val whole = Files.readString(path)
+    for (broken <- Seq(whole.take(whole.length / 2), "", "not json",
+        whole.replace("\"rows\":1", "\"rows\":\"1\""))) {
+      Files.writeString(path, broken)
+      val e = intercept[IllegalStateException](store.manifests())
+      assert(e.getMessage.contains(path.toString), e.getMessage)
+      val e2 = intercept[IllegalStateException](store.read(spark))
+      assert(e2.getMessage.contains(path.toString), e2.getMessage)
+    }
+  }
+
+  test("manifest on-disk format: golden bytes decode and re-encode identically") {
+    val (store, dir) = freshStore()
+    // byte-for-byte what the store has always written: ']' inside a
+    // files path, escaped quote, backslash and newline, all keys
+    val golden =
+      """{"id":7,"dir":"/s/run[2026]/data/part-ev","stage":"ev","marker":"say \"hi\" c:\\tmp\nend","rows":3,"wall_ms":12,"hidden":["day"],"hidden_exprs":["CAST((ts / 86400) AS BIGINT)"],"parts":["p"],"files":["/s/run[2026]/data/part-ev/p=x/day=0/snap-7-a].parquet","/s/b.parquet"],"replaces":[3,5],"metrics":{"bucket":2,"min_ts":-5}}"""
+    val expected = store.Manifest(7L, "/s/run[2026]/data/part-ev", "ev",
+      "say \"hi\" c:\\tmp\nend", rows = 3L, wallMs = 12L,
+      metrics = Map("bucket" -> 2L, "min_ts" -> -5L), hidden = Seq("day"),
+      parts = Seq("p"),
+      files = Seq("/s/run[2026]/data/part-ev/p=x/day=0/snap-7-a].parquet", "/s/b.parquet"),
+      hiddenExprs = Seq("CAST((ts / 86400) AS BIGINT)"), replaces = Seq(3L, 5L))
+    assert(store.decode(golden) == expected)
+    assert(store.encode(expected) == golden)
+    Files.writeString(java.nio.file.Paths.get(dir, "_snapshots", "7.json"), golden)
+    assert(store.manifests() == Seq(expected))
+  }
+
   test("commitBuckets: one write job, per-bucket lineage, empty buckets marker-only, replay no-op") {
     import spark.implicits._
     val (store, _) = freshStore()
@@ -290,13 +340,18 @@ class SnapshotStoreSpec extends SparkSuite {
     // pre-r5 manifest (hidden recorded WITHOUT transform SQL): the
     // transform isn't reconstructible — INSERT must still be refused,
     // not silently mislaid
-    val oldDir = java.nio.file.Paths.get(dir, "data", "snap-old")
+    val oldDir = java.nio.file.Paths.get(dir, "data", "part-evold")
     Seq((86410L, "a")).toDF("ts", "v")
       .withColumn("day", (col("ts") / 86400L).cast("long"))
       .write.partitionBy("day").parquet(oldDir.toString)
+    val oldFiles = {
+      val walk = java.nio.file.Files.walk(oldDir)
+      try walk.toArray.map(_.toString).filter(_.endsWith(".parquet"))
+      finally walk.close()
+    }
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "_snapshots", s"${store.latestId.get + 1}.json"),
-      s"""{"id":${store.latestId.get + 1},"dir":"$oldDir","stage":"evold","marker":"mo","rows":1,"wall_ms":1,"hidden":["day"],"metrics":{}}""")
+      s"""{"id":${store.latestId.get + 1},"dir":"$oldDir","stage":"evold","marker":"mo","rows":1,"wall_ms":1,"hidden":["day"],"files":[${oldFiles.map("\"" + _ + "\"").mkString(",")}],"metrics":{}}""")
     val e = intercept[Exception](
       spark.sql(s"INSERT INTO $cat.evold VALUES (5, 'x')"))
     // must be THE pre-r5 guard, not any incidental failure
@@ -344,28 +399,6 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(e2.getMessage.contains("reserved"), e2.getMessage)
   }
 
-  test("migrateLegacyPartitioned does not count externally-wiped snapshots") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val (store, dir) = freshStore()
-    // hand-write a legacy (pre-file-manifest) partitioned snapshot whose
-    // data dir never existed — the tolerated externally-wiped state
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "_snapshots"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "_snapshots", "1.json"),
-      s"""{"id":1,"dir":"$dir/data/gone","stage":"w","marker":"m1","rows":1,"wall_ms":1,"hidden":[],"parts":["p"],"files":[],"metrics":{}}""")
-    assert(store.migrateLegacyPartitioned("w") == 0) // nothing relocated
-    // a real legacy snapshot beside it still migrates and counts
-    val oldDir = java.nio.file.Paths.get(dir, "data", "snap-legacy-w")
-    Seq(("a", "p1")).toDF("v", "p").write.partitionBy("p").parquet(oldDir.toString)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "_snapshots", "2.json"),
-      s"""{"id":2,"dir":"$oldDir","stage":"w","marker":"m2","rows":1,"wall_ms":1,"hidden":[],"parts":["p"],"files":[],"metrics":{}}""")
-    assert(store.migrateLegacyPartitioned("w") == 1)
-    assert(store.read(spark, stage = Some("w"), marker = Some("m2"))
-      .where(col("p") === "p1").count() == 1)
-  }
-
   test("a duplicate snapshot id fails loudly and never clobbers the committed manifest") {
     import spark.implicits._
     val (store, dir) = freshStore()
@@ -404,23 +437,6 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(store.read(spark, stage = Some("s")).count() == 2)
   }
 
-  test("migrate skips a legacy dir whose parquet files were wiped") {
-    import spark.implicits._
-    val (store, dir) = freshStore()
-    // healthy file-granular snapshot in the shared tree first
-    store.commit(Seq(("a", "p1")).toDF("v", "p"), "g", "m1", partitionBy = Seq("p"))
-    // legacy manifest whose dir EXISTS but holds no parquet files —
-    // rewriting it would re-classify it over the whole shared tree
-    val hollow = java.nio.file.Paths.get(dir, "data", "snap-hollow")
-    java.nio.file.Files.createDirectories(hollow)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "_snapshots", "99.json"),
-      s"""{"id":99,"dir":"$hollow","stage":"g","marker":"mh","rows":1,"wall_ms":1,"hidden":[],"parts":["p"],"files":[],"metrics":{}}""")
-    assert(store.migrateLegacyPartitioned("g") == 0)
-    // the healthy snapshot still serves exactly once (no double-serve)
-    assert(store.read(spark, stage = Some("g"), marker = Some("m1")).count() == 1)
-  }
-
   test("cached store instance survives an external wipe of its directories") {
     import spark.implicits._
     val (store, dir) = freshStore()
@@ -437,13 +453,14 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(store.read(spark).collect().map(_.getString(1)).toSeq == Seq("b"))
   }
 
-  test("pre-file-manifest partitioned snapshots (legacy layout) still serve their rows") {
+  test("leftover directory-layout partitioned manifests fail loudly") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val (store, dir) = freshStore()
-    // hand-craft a pre-r4 manifest: partitioned data in its OWN
-    // snap-<id> dir, layout recorded, NO files list — the upgrade must
-    // keep reading it (durable stores survive code upgrades)
+    // hand-craft a manifest in the retired directory-based layout:
+    // partitioned data in its OWN snap-<id> dir, layout recorded, NO
+    // files list — the store no longer reads it, and must say so
+    // rather than silently serve a union without its rows
     val legacyDir = java.nio.file.Paths.get(dir, "data", "snap-1")
     Seq((86410L, "a"), (86400L * 2 + 5, "b")).toDF("ts", "v")
       .withColumn("day", (col("ts") / 86400L).cast("long"))
@@ -451,57 +468,22 @@ class SnapshotStoreSpec extends SparkSuite {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "_snapshots", "1.json"),
       s"""{"id":1,"dir":"$legacyDir","stage":"ev","marker":"m1","rows":2,"wall_ms":1,"hidden":["day"],"metrics":{}}""")
-    // plus a NEW-format partitioned commit on the same stage
+    // plus a current-format partitioned commit on the same stage
     store.commit(Seq((86400L * 3 + 9, "c")).toDF("ts", "v"), "ev", "m2",
       hiddenPartitions = Seq("day" -> (col("ts") / 86400L).cast("long")))
-    val rd = store.read(spark, stage = Some("ev"))
-    assert(rd.columns.toSet == Set("ts", "v"), rd.columns.toSeq)
-    assert(rd.collect().map(_.getString(1)).toSet == Set("a", "b", "c"))
-    assert(store.read(spark, stage = Some("ev"), asOf = Some(1L)).count() == 2)
-  }
-
-  test("two same-spec legacy partitioned snapshots serve as one SQL scan") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val (store, dir) = freshStore()
-    def legacy(id: Int, rows: Seq[(Long, String)], marker: String): Unit = {
-      val d = java.nio.file.Paths.get(dir, "data", s"snap-$id")
-      rows.toDF("ts", "v").withColumn("day", (col("ts") / 86400L).cast("long"))
-        .write.partitionBy("day").parquet(d.toString)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, "_snapshots", s"$id.json"),
-        s"""{"id":$id,"dir":"$d","stage":"ev","marker":"$marker","rows":${rows.size},"wall_ms":1,"hidden":["day"],"metrics":{}}""")
-    }
-    legacy(1, Seq((10L, "a"), (86405L, "b")), "m1")
-    legacy(2, Seq((86400L * 2 + 3, "c")), "m2")
-    // programmatic read always worked: one single-root scan per legacy
-    // dir, unioned (Spark cannot union several partitioned ROOTS in
-    // one scan — re-verified this round: the multi-path form throws
-    // CONFLICTING_DIRECTORY_STRUCTURES even with identical specs)
-    assert(store.read(spark, stage = Some("ev"))
-      .collect().map(_.getString(1)).toSet == Set("a", "b", "c"))
+    def namesSnapshot1(e: Throwable) =
+      assert(e.getMessage.contains("snapshot(s) 1 in"), e.getMessage)
+    namesSnapshot1(intercept[IllegalStateException](store.read(spark, stage = Some("ev"))))
+    namesSnapshot1(intercept[IllegalStateException](store.read(spark)))
+    namesSnapshot1(intercept[IllegalStateException](
+      store.read(spark, stage = Some("ev"), asOf = Some(1L))))
     val cat = s"snapl${math.abs(dir.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", dir)
-    // SQL: two legacy roots are two incompatible layout groups — the
-    // error must name the upgrade path
-    val e = intercept[IllegalStateException](spark.table(s"$cat.ev").collect())
-    assert(e.getMessage.contains("migrateLegacyPartitioned"), e.getMessage)
-    // the upgrade (ADVICE r4): copy files into the shared hive tree,
-    // atomically rewrite manifests file-granular, drop legacy dirs —
-    // after it the stage is ONE SQL-servable layout group
-    assert(store.migrateLegacyPartitioned("ev") == 2)
-    assert(spark.sql(s"SELECT v FROM $cat.ev")
-      .collect().map(_.getString(0)).toSet == Set("a", "b", "c"))
-    // both surfaces serve the same logical schema (hidden col dropped),
-    // rows survive, and as-of isolation still selects per manifest
-    assert(spark.table(s"$cat.ev").columns.toSeq ===
-      store.read(spark, stage = Some("ev")).columns.toSeq)
-    assert(store.read(spark, stage = Some("ev"))
-      .collect().map(_.getString(1)).toSet == Set("a", "b", "c"))
-    assert(store.read(spark, stage = Some("ev"), asOf = Some(1L)).count() == 2)
-    // idempotent: nothing legacy left to migrate
-    assert(store.migrateLegacyPartitioned("ev") == 0)
+    namesSnapshot1(intercept[IllegalStateException](spark.table(s"$cat.ev").collect()))
+    // a read that does not select the leftover snapshot is unaffected
+    assert(store.read(spark, stage = Some("ev"), marker = Some("m2"))
+      .collect().map(_.getString(1)).toSeq == Seq("c"))
   }
 
   test("partitioned stage: as-of isolation, schema evolution, stats pruning over file manifests") {
@@ -517,6 +499,7 @@ class SnapshotStoreSpec extends SparkSuite {
     // holds even though all files share one hive tree
     assert(store.read(spark, stage = Some("s")).count() == 3)
     assert(store.read(spark, stage = Some("s"), asOf = Some(1L)).count() == 2)
+    assert(store.read(spark, stage = Some("s"), marker = Some("m1")).count() == 2)
     // the partition column round-trips through the shared tree
     assert(store.read(spark, stage = Some("s"))
       .where(col("pc") === "p1").count() == 2)
