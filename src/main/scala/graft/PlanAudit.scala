@@ -32,8 +32,9 @@ object PlanAudit {
                        //   memoized triple table — no pair SELF-join (the canon
                        //   broadcast join belongs to the triple chain and is
                        //   expected; ADVICE r5)
-    "graph_pagerank",  // expect ranks read from the round-truncated checkpoint —
-                       //   constant-depth plan however many iterations ran (r5)
+    "graph_pagerank",  // expect ranks read from the driver loop's local relation
+                       //   (under the size gate); above it, from the round-truncated
+                       //   checkpoint — constant depth however many iterations ran (r5)
     "graph_triangles", // expect InMemory mutual-edge reuse on all three legs (r5)
     "topk")            // expect TakeOrderedAndProject, not global sort
 

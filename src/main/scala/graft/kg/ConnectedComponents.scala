@@ -101,7 +101,7 @@ object ConnectedComponents {
     * diverges on supplementary characters), integral types compare
     * numerically. None = type unsupported locally → caller takes the
     * distributed path, whose least/min handles any orderable type. */
-  private def localOrdering(edges: DataFrame): Option[Ordering[Any]] = {
+  private[kg] def localOrdering(edges: DataFrame): Option[Ordering[Any]] = {
     import org.apache.spark.sql.types._
     val Seq(srcT, dstT) = edges.schema.fields.map(_.dataType).toSeq
     if (srcT != dstT) return None

@@ -1,8 +1,12 @@
 package graft.kg
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Downstream analytics over the CONSTRUCTED graph — the consumption
@@ -33,7 +37,14 @@ import org.apache.spark.storage.StorageLevel
   *    reduction orders — no float-summation-order dependence — and each
   *    round is lineage-truncated ([[ConnectedComponents.materializeRound]])
   *    exactly like the CC fixpoint, keeping plan depth constant across
-  *    iterations.
+  *    iterations;
+  *  - PageRank is size-gated: at or under
+  *    [[ConnectedComponents.LocalEdgeThreshold]] edges (the gate of the
+  *    CC union-find path) the edges are collected and the same integer
+  *    recurrence runs in a driver loop — below that size every
+  *    distributed round is mostly fixed job-scheduling latency (a
+  *    top-8 co-mention graph over dictionary-sized entity sets has a
+  *    few hundred edges). Larger graphs take the distributed loop.
   */
 object GraphAnalytics {
 
@@ -114,24 +125,6 @@ object GraphAnalytics {
   /** PageRank scale: initial rank per node (1.0 in fixed-point). */
   val PrScale = 1000000L
 
-  /** Fixed-point integer PageRank over directed edges (src, dst):
-    * rank_0 = 10^6; rank_{k+1}(n) = 0.15·10^6 + 0.85·Σ_{(m,n)∈E}
-    * (rank_k(m) div outdeg(m)), all in BIGINT arithmetic (div =
-    * integral division), so every engine and every reduction order
-    * produces the same integers. Nodes = distinct edge sources (in a
-    * top-k graph every participating node has out-edges, so none
-    * dangle); nodes without in-edges keep the 0.15 base via the left
-    * join. The edge+degree frame is persisted once (DISK_ONLY — same
-    * recompute-from-lineage contract as the dedup sketches; released
-    * on return when `releaseInputs`); rank lineage is truncated every
-    * [[TruncateEvery]] rounds (and always at the final round), so plan
-    * depth stays bounded by a constant however many iterations run
-    * while the driver pays far fewer whole-job round trips (r6).
-    *
-    * Overflow bound: total mass is conserved (a node distributes at
-    * most its own rank), so every rank ≤ nodes·10^6 and the damping
-    * product 85·Σ stays under 2^63 up to ~10^11 nodes; beyond that the
-    * ANSI-mode multiply throws loudly rather than corrupting ranks. */
   /** Lineage-truncation cadence for the PageRank loops (r6): rounds
     * between [[ConnectedComponents.materializeRound]] calls. Each
     * truncation is a whole eager Spark job of fixed scheduling latency;
@@ -153,7 +146,26 @@ object GraphAnalytics {
     * one job and loses the pipelining the two-job split gets). */
   val TruncateEvery = 2
 
-  /** `releaseInputs` (ADVICE r5): true → the cached edge/degree/node
+  /** Fixed-point integer PageRank over directed edges (src, dst):
+    * rank_0 = 10^6; rank_{k+1}(n) = 0.15·10^6 + 0.85·Σ_{(m,n)∈E}
+    * (rank_k(m) div outdeg(m)), all in BIGINT arithmetic (div =
+    * integral division), so every engine and every reduction order
+    * produces the same integers. Out-degree counts every edge row
+    * (duplicates included); nodes = distinct edge sources (in a top-k
+    * graph every participating node has out-edges, so none dangle);
+    * nodes without in-edges keep the 0.15 base.
+    *
+    * Size gate: the projected edge frame is counted first. At or
+    * under [[ConnectedComponents.LocalEdgeThreshold]] edges (string or
+    * integral ids) the edges are collected and the same recurrence
+    * runs in a driver loop, returned as a local relation with the
+    * distributed path's rows and schema — a co-mention graph of a few
+    * hundred edges then costs the count and the collect instead of
+    * several whole Spark jobs per iteration. Below the gate no rank can overflow (every rank ≤ nodes·10^6 ≤
+    * 10^12), so plain Long arithmetic is exact. Larger graphs take
+    * the distributed loop ([[pagerankIntDistributed]]).
+    *
+    * `releaseInputs` (ADVICE r5): true → the cached edge/degree/node
     * frames are unpersisted on return (safe: the final round is always
     * materialized), which is what a long-lived driver refreshing
     * analytics per corpus version needs — without it every refresh
@@ -162,13 +174,68 @@ object GraphAnalytics {
     * dedupe by canonicalized plan — the right trade for interactive /
     * measurement use (measured r6: releasing unconditionally made every
     * repeat call rebuild the window+degree subtree, +0.6 s per call at
-    * sf0.1). [[Pipeline.runAnalytics]] passes true. */
+    * sf0.1). [[Pipeline.runAnalytics]] passes true. The driver loop
+    * caches nothing, so the flag only matters above the gate. */
   def pagerankInt(edges: DataFrame, iters: Int = 3,
                   truncateEvery: Int = TruncateEvery,
                   releaseInputs: Boolean = false): DataFrame = {
     require(iters >= 1, s"pagerankInt: iters must be >= 1, got $iters")
     require(truncateEvery >= 1,
       s"pagerankInt: truncateEvery must be >= 1, got $truncateEvery")
+    val e0 = edges.select(col("src"), col("dst"))
+    // the ids the CC union-find can order (one string or integral
+    // type) are also ids whose Java equality is Spark's join equality
+    if (ConnectedComponents.localOrdering(e0).isDefined &&
+        e0.count() <= ConnectedComponents.LocalEdgeThreshold)
+      pagerankLocal(e0, iters)
+    else pagerankIntDistributed(edges, iters, truncateEvery, releaseInputs)
+  }
+
+  /** Driver-side [[pagerankInt]] over collected edges. Null endpoints
+    * follow the distributed joins: a null source is a node (its rows
+    * count toward its degree) that never sends or receives rank, so it
+    * stays at the 0.15 base; an edge into null or into a non-node
+    * counts toward its source's degree but its share is dropped. */
+  private def pagerankLocal(e0: DataFrame, iters: Int): DataFrame = {
+    val edges = e0.collect().map(r => (r.get(0), r.get(1)))
+    val id = mutable.LinkedHashMap.empty[Any, Int]
+    edges.foreach { case (s, _) => id.getOrElseUpdate(s, id.size) }
+    val deg = new Array[Long](id.size)
+    edges.foreach { case (s, _) => deg(id(s)) += 1 }
+    val flows = edges.collect {
+      case (s, d) if s != null && d != null && id.contains(d) => (id(s), id(d))
+    }
+    var pr = Array.fill(id.size)(PrScale)
+    for (_ <- 1 to iters) {
+      val s = new Array[Long](id.size)
+      flows.foreach { case (m, n) => s(n) += pr(m) / deg(m) }
+      pr = s.map(x => 150000L + 85L * x / 100L)
+    }
+    val rows = id.iterator.map { case (n, i) => Row(n, pr(i)) }.toSeq
+    val srcF = e0.schema.fields.head
+    e0.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("n", srcF.dataType, srcF.nullable),
+      // nullable like the distributed `div` expression
+      StructField("pr", LongType, nullable = true))))
+  }
+
+  /** The distributed [[pagerankInt]] loop, taken above the size gate;
+    * tests call it directly as the reference for the driver loop. The
+    * edge+degree frame is persisted once (DISK_ONLY — same
+    * recompute-from-lineage contract as the dedup sketches; released
+    * on return when `releaseInputs`); rank lineage is truncated every
+    * [[TruncateEvery]] rounds (and at the final round under
+    * `releaseInputs`), so plan
+    * depth stays bounded by a constant however many iterations run
+    * while the driver pays far fewer whole-job round trips (r6).
+    *
+    * Overflow bound: total mass is conserved (a node distributes at
+    * most its own rank), so every rank ≤ nodes·10^6 and the damping
+    * product 85·Σ stays under 2^63 up to ~10^11 nodes; beyond that the
+    * ANSI-mode multiply throws loudly rather than corrupting ranks. */
+  private[kg] def pagerankIntDistributed(edges: DataFrame, iters: Int = 3,
+                                         truncateEvery: Int = TruncateEvery,
+                                         releaseInputs: Boolean = false): DataFrame = {
     // edges feed both the degree agg and the join frame — persist first
     // so the (possibly corpus-derived) edge subtree materializes once
     val e0 = edges.select(col("src"), col("dst")).persist(StorageLevel.DISK_ONLY)

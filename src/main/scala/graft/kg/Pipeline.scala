@@ -46,7 +46,9 @@ object Pipeline {
     def corpus(): DataFrame =
       corpusPath.map(spark.read.parquet(_)).getOrElse(Corpus.docs(spark, sfDir))
 
-    val gazSeq = Stages.gazetteer(spark, sfDir)
+    // lazy: only a stage that actually runs forces the gazetteer job,
+    // so a no-op resume over a complete store never touches sfDir
+    lazy val gazSeq = Stages.gazetteer(spark, sfDir)
       .select(col("surface"), col("coarse_type"))
       .collect().toSeq.map(r => (r.getString(0), r.getString(1)))
 
@@ -63,8 +65,12 @@ object Pipeline {
     val missing = (0 until NumBuckets)
       .filterNot(b => done.contains(s"mentions-bucket-$b"))
     missing.grouped(math.max(1, bucketsPerScan)).foreach { group =>
+      // the gazetteer collect before the corpus read (and its file
+      // listing): it stays the first job of a run, which is what
+      // per-stage job attribution in traced runs keys on
+      val gaz = gazSeq
       val docs = corpus().where(bucketOf(col("doc_id")).isin(group: _*))
-      val m = Engine.mentions(Corpus.explodeSpansAdj(docs), gazSeq, carry)
+      val m = Engine.mentions(Corpus.explodeSpansAdj(docs), gaz, carry)
         .withColumn("bucket", bucketOf(col("doc_id")))
       store.commitBuckets(m, stage = "mentions", bucketCol = "bucket",
         buckets = group, markerFor = b => s"mentions-bucket-$b",

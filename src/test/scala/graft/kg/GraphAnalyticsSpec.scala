@@ -1,6 +1,7 @@
 package graft.kg
 
-import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -19,6 +20,18 @@ class GraphAnalyticsSpec extends SparkSuite {
     import spark.implicits._
     rows.toDF("src", "dst")
   }
+
+  /** Both sides of the pagerankInt size gate: the public entry (driver
+    * loop for every graph these tests build) and the distributed loop. */
+  private val prPaths: Seq[(String, (DataFrame, Int) => DataFrame)] = Seq(
+    "local" -> ((e, i) => GraphAnalytics.pagerankInt(e, iters = i)),
+    "distributed" -> ((e, i) => GraphAnalytics.pagerankIntDistributed(e, iters = i)))
+
+  private def ranks(df: DataFrame): Map[String, Long] =
+    df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
 
   test("degrees: per-subject triple/pred/obj profile") {
     val t = triples(
@@ -98,22 +111,77 @@ class GraphAnalyticsSpec extends SparkSuite {
     val e = edges(
       ("C", "L1"), ("C", "L2"), ("C", "L3"),
       ("L1", "C"), ("L2", "C"), ("L3", "C"))
-    val got = GraphAnalytics.pagerankInt(e, iters = 2)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got == Map(
-      "C" -> 1254999L, "L1" -> 915000L, "L2" -> 915000L, "L3" -> 915000L))
+    for ((path, pr) <- prPaths)
+      assert(ranks(pr(e, 2)) == Map(
+        "C" -> 1254999L, "L1" -> 915000L, "L2" -> 915000L, "L3" -> 915000L), path)
   }
 
   test("pagerankInt: node without in-edges keeps the damping base") {
     // D -> A one-way; A <-> B keep each other at fixpoint 1e6.
     // r1(D) = 150000 + 0; contributions: A gets D's 1e6 + B's 1e6.
     val e = edges(("A", "B"), ("B", "A"), ("D", "A"))
-    val got = GraphAnalytics.pagerankInt(e, iters = 1)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // deg(A)=1, deg(B)=1, deg(D)=1
     // r1(A) = 150000 + 85*(1e6 + 1e6)/100 = 150000 + 1700000 = 1850000
     // r1(B) = 150000 + 85*1e6/100 = 1000000 ; r1(D) = 150000
-    assert(got == Map("A" -> 1850000L, "B" -> 1000000L, "D" -> 150000L))
+    for ((path, pr) <- prPaths)
+      assert(ranks(pr(e, 1)) == Map("A" -> 1850000L, "B" -> 1000000L, "D" -> 150000L), path)
+  }
+
+  test("pagerankInt: driver loop == distributed loop on random graphs, rows and schema") {
+    // Seeded random graphs with duplicate edges, self-loops and
+    // destinations without out-edges (sinks), 1-5 iterations. The
+    // distributed loop is the reference: equal rows AND equal schema
+    // (names, types, nullability), so a committed stage is the same
+    // parquet whichever side of the gate produced it.
+    import spark.implicits._
+    val rnd = new scala.util.Random(42)
+    for (g <- 0 until 8) {
+      val nodes = 1 + rnd.nextInt(12)
+      def node() = s"v${rnd.nextInt(nodes)}"
+      val base = Seq.fill(rnd.nextInt(30))(
+        (node(), if (rnd.nextInt(5) == 0) s"sink${rnd.nextInt(3)}" else node()))
+      val loops = Seq.fill(rnd.nextInt(3))(node()).map(v => (v, v))
+      val dups = if (base.isEmpty) Nil else Seq.fill(1 + rnd.nextInt(4))(base(rnd.nextInt(base.size)))
+      val e = rnd.shuffle(base ++ loops ++ dups).toDF("src", "dst")
+      val iters = 1 + rnd.nextInt(5)
+      val local = GraphAnalytics.pagerankInt(e, iters = iters)
+      assert(local.queryExecution.analyzed.isInstanceOf[LocalRelation],
+        s"graph $g did not take the driver loop")
+      val dist = GraphAnalytics.pagerankIntDistributed(e, iters = iters)
+      assert(local.schema == dist.schema, s"graph $g")
+      assert(sortedRows(local) == sortedRows(dist), s"graph $g, iters $iters")
+    }
+    // integral ids keep their type and non-nullable key on both sides
+    val ids = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 3L), (1L, 2L)).toDF("src", "dst")
+    val local = GraphAnalytics.pagerankInt(ids, iters = 3)
+    val dist = GraphAnalytics.pagerankIntDistributed(ids, iters = 3)
+    assert(local.schema == dist.schema && !local.schema("n").nullable)
+    assert(sortedRows(local) == sortedRows(dist))
+  }
+
+  test("pagerankIntDistributed: ranks read from the round-truncated checkpoint") {
+    // the returned frame builds on the materialized round — an RDD scan,
+    // not a re-derivation of the whole iterative lineage
+    val e = edges(("A", "B"), ("B", "A"), ("C", "A"))
+    val p = GraphAnalytics.pagerankIntDistributed(e, iters = 3)
+      .queryExecution.executedPlan.toString
+    assert(p.contains("Scan ExistingRDD"), p.take(900))
+  }
+
+  test("pagerankInt: null endpoints give the distributed loop's rows on both paths") {
+    // The distributed joins never match a null key: a null source is a
+    // node (its row counts in deg) that sends and receives nothing, so
+    // it stays at the base; A's edge into null counts in deg(A) but its
+    // share is dropped. deg(A)=2, deg(B)=1, deg(null)=1.
+    // r1(A) = 150000 + 85*(1e6 div 1)/100 = 1000000
+    // r1(B) = 150000 + 85*(1e6 div 2)/100 = 575000 ; r1(null) = 150000
+    val e = edges(("A", "B"), ("B", "A"), (null, "A"), ("A", null))
+    for ((path, pr) <- prPaths) {
+      val got = pr(e, 1).collect().map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+      assert(got == Map(Some("A") -> 1000000L, Some("B") -> 575000L, None -> 150000L), path)
+    }
+    assert(sortedRows(GraphAnalytics.pagerankInt(e, iters = 3)) ==
+      sortedRows(GraphAnalytics.pagerankIntDistributed(e, iters = 3)))
   }
 
   test("pagerankIntW: hand-computed weighted shares") {

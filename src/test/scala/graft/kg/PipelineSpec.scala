@@ -43,6 +43,15 @@ class PipelineSpec extends SparkSuite {
     assert(store2.manifests().size == nSnaps) // nothing recommitted
   }
 
+  test("no-op resume over a complete store never reads the source data") {
+    // the gazetteer is forced only by a stage that runs: with every
+    // marker present, a missing sfDir must not matter
+    val out = Files.createTempDirectory("pipe-noop").toString
+    val nSnaps = Pipeline.run(spark, sf, out).manifests().size
+    val missing = Files.createTempDirectory("pipe-nosf").resolve("absent").toString
+    assert(Pipeline.run(spark, missing, out).manifests().size == nSnaps)
+  }
+
   test("runAnalytics: committed graph stages == declarative analytics; resume is a no-op") {
     val out = Files.createTempDirectory("pipe-an").toString
     val store = Pipeline.run(spark, sf, out)
